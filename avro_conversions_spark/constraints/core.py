@@ -1,16 +1,21 @@
-"""Row-level constraint DSL.
+"""Row-level constraint DSL and the violation contract.
 
 Each constraint is the direct analogue of a reference ResolveRule
 (opwvhk/avro/io/AsAvroParserBase.java:515-550): a plan-time compatibility
-check plus a runtime Column predicate (true → violation) plus an
-"observed" projector used to build the violation row. All predicates are
-pure ``pyspark.sql.Column`` expressions — they fuse into one whole-stage
-codegen pass over the table, so N constraints cost one scan, not N.
+check plus a runtime Column predicate (true → violation). All predicates
+are pure ``pyspark.sql.Column`` expressions — they fuse into one
+whole-stage codegen pass over the table, so N constraints cost one scan,
+not N.
 
 Violations are *rows with reason codes*; the engine never throws per row
 (the reference throws IOException per document,
 opwvhk/avro/json/JsonAsAvroParser.java:304-315 — that does not survive
-10^12 rows).
+10^12 rows). This module owns their shape (FIXTURES.md §5): the frozen
+``observed`` format (``canonical_str``), the checks → violation-array
+builder (``_violation_array``) and the array → one-row-per-violation step
+(``_explode_violations``). The engine's and the streaming bridge's row
+pass (``_row_constraint_violations``), the sequence constraint and the
+document parsers all build violations through them.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable, Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,6 +35,72 @@ from avro_conversions_spark.schema.resolution import (
     WriteType,
     from_spark_schema,
 )
+
+# Frozen formatting of ``observed`` (byte-match requirement, BASELINE.json:15):
+# timestamps ISO-8601 with 6-digit micros + offset, everything else (decimals
+# included) its plain string cast.
+TS_CANON_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+
+# members of one violation struct: a constraint-engine violation row, and an
+# entry of a document parser's ``_violations`` array
+ROW_VIOLATION = ("constraint", "column", "reason", "observed")
+DOC_VIOLATION = ("column", "reason")
+
+# (predicate → true means violation, member values); a str value is a literal
+Check = tuple[Column, Sequence["Column | str"]]
+
+
+def canonical_str(col: Column, dtype: T.DataType) -> Column:
+    """The ``observed`` rendering of ``col`` (of type ``dtype``)."""
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return F.date_format(col, TS_CANON_FMT)
+    return col.cast("string")
+
+
+def _violation_array(checks: Sequence[Check], members: Sequence[str]) -> Column:
+    """The violations one row raises: a struct of ``members`` per check whose
+    predicate is true. With no checks it is an empty array that still has
+    the ``array<struct<member: string, ...>>`` type."""
+    if not checks:
+        fields = [T.StructField(m, T.StringType()) for m in members]
+        return F.array().cast(T.ArrayType(T.StructType(fields)))
+    structs = [
+        F.when(
+            pred,
+            F.struct(
+                *[
+                    (v if isinstance(v, Column) else F.lit(v)).alias(m)
+                    for m, v in zip(members, values, strict=True)
+                ]
+            ),
+        )
+        for pred, values in checks
+    ]
+    return F.filter(F.array(*structs), lambda x: x.isNotNull())
+
+
+def _explode_violations(df: DataFrame, keep: Sequence[str], violations: Column) -> DataFrame:
+    """One row per entry of the ``violations`` array: the ``keep`` columns
+    beside the struct's members. Rows without violations never reach the
+    explode."""
+    return (
+        df.select(*keep, violations.alias("_v"))
+        .where(F.size("_v") > 0)
+        .select(*keep, F.explode("_v").alias("_e"))
+        .select(*keep, "_e.*")
+    )
+
+
+def _row_constraint_violations(
+    df: DataFrame, constraints: Sequence[RowConstraint], keep: Sequence[str]
+) -> DataFrame:
+    """The row pass: one ``ROW_VIOLATION`` row per failing (row, constraint)
+    pair, beside the ``keep`` columns."""
+    checks: list[Check] = []
+    for c in constraints:
+        observed = canonical_str(F.col(c.column), df.schema[c.column].dataType)
+        checks.append((c.violation(), (c.name, c.column, c.reason, observed)))
+    return _explode_violations(df, keep, _violation_array(checks, ROW_VIOLATION))
 
 
 @dataclass
@@ -54,9 +125,6 @@ class RowConstraint:
 
     def violation(self) -> Column:
         return self.predicate(F.col(self.column))
-
-    def observed(self) -> Column:
-        return F.col(self.column).cast("string")
 
 
 # --------------------------------------------------------------------------
@@ -236,6 +304,7 @@ def from_column_plans(plans: Sequence[ColumnPlan]) -> list[RowConstraint]:
 
 __all__ = [
     "RowConstraint",
+    "canonical_str",
     "not_null",
     "enum_in",
     "range_check",

@@ -8,7 +8,9 @@ Execution shape (designed for 100 TB / 1000 executors; see SURVEY.md §3.3):
    exactly like the reference's resolver compile
    (opwvhk/avro/io/AsAvroParserBase.java:369-398).
 2. row pass: ALL row constraints evaluate in ONE columnar scan — each row
-   projects an array of violation structs, filtered and exploded. Catalyst
+   projects an array of violation structs, filtered and exploded (the
+   builders in ``constraints/core.py``, shared with the sequence
+   constraint, the streaming bridge and the document parsers). Catalyst
    prunes the scan to exactly the constrained + key columns and fuses the
    predicates into one WholeStageCodegen span. N constraints != N scans.
 3. aggregate passes: uniqueness (salted two-phase agg), referential
@@ -20,9 +22,9 @@ Execution shape (designed for 100 TB / 1000 executors; see SURVEY.md §3.3):
    key — a metadata-cheap second scan, not a second full read.
 
 Output schemas are frozen in FIXTURES.md §5; violation ordering is
-canonical ``ORDER BY key..., constraint`` and observed values use a frozen
-formatting spec (timestamps: ISO-8601 with 6-digit micros + offset,
-decimals: plain string) so golden fixtures byte-match (BASELINE.json:15).
+canonical ``ORDER BY key..., constraint`` and observed values use the
+frozen formatting spec ``constraints.core.canonical_str`` so golden
+fixtures byte-match (BASELINE.json:15).
 """
 
 from __future__ import annotations
@@ -34,23 +36,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from avro_conversions_spark.constraints.core import RowConstraint
+from avro_conversions_spark.constraints.core import RowConstraint, _row_constraint_violations
 from avro_conversions_spark.constraints.referential import ReferentialConstraint
 from avro_conversions_spark.constraints.sequence import SequenceConstraint
 from avro_conversions_spark.constraints.uniqueness import UniqueConstraint
 
-TS_CANON_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
 # internal column name for the carried partition key (stripped from outputs)
 _PART = "_acs_part"
-
-
-def canonical_str(col: Column, dtype: T.DataType) -> Column:
-    """Frozen formatting spec for the ``observed`` field (byte-match
-    requirement)."""
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return F.date_format(col, TS_CANON_FMT)
-    return col.cast("string")
 
 
 @dataclass
@@ -97,28 +89,8 @@ class ValidationEngine:
     def _row_violations(self, df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
         if not self.row_constraints:
             return None  # type: ignore[return-value]
-        schema = df.schema
-        structs = []
-        for c in self.row_constraints:
-            dtype = schema[c.column].dataType
-            structs.append(
-                F.when(
-                    c.violation(),
-                    F.struct(
-                        F.lit(c.name).alias("constraint"),
-                        F.lit(c.column).alias("column"),
-                        F.lit(c.reason).alias("reason"),
-                        canonical_str(F.col(c.column), dtype).alias("observed"),
-                    ),
-                )
-            )
-        arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-        sel = [*self.key_cols, *extra_cols]
-        return (
-            df.select(*sel, arr.alias("_v"))
-            .where(F.size("_v") > 0)
-            .select(*sel, F.explode("_v").alias("_e"))
-            .select(*sel, "_e.*")
+        return _row_constraint_violations(
+            df, self.row_constraints, [*self.key_cols, *extra_cols]
         )
 
     # ------------------------------------------------------------ agg passes

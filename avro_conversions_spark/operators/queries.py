@@ -19,7 +19,6 @@ Conventions:
 
 from __future__ import annotations
 
-import os
 import shutil
 from collections.abc import Callable
 
@@ -47,6 +46,14 @@ EVENT_TYPES_OK = ("view", "click", "signup", "purchase")  # 'error' = violation
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _oracle_stage(name: str) -> str:
+    """The fixed parquet path a query stages its input to for its DuckDB
+    oracle. The oracle SQL embeds the path, so it is a pure function of the
+    name: every process renders the same oracle text. Writers overwrite, so
+    two processes must not run the same staging query at once."""
+    return f"/tmp/acs_oracle_{name}"
 
 
 # ---------------------------------------------------------------- validation
@@ -528,7 +535,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CONTAINERS_ORACLE_PATH = f"/tmp/acs_oracle_containers_{os.getpid()}"
+CONTAINERS_ORACLE_PATH = _oracle_stage("containers")
 
 
 def q_multimodal_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1068,10 +1075,7 @@ def q_stream_windowed_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-# per-process staging paths: the oracle SQL embeds the path at import
-# time, and the Spark query writes it in the same process, so a pid
-# suffix keeps concurrent driver runs from clobbering each other
-STATEFUL_ORACLE_PATH = f"/tmp/acs_oracle_stateful_{os.getpid()}"
+STATEFUL_ORACLE_PATH = _oracle_stage("stateful")
 
 
 def q_stateful_stream_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1304,8 +1308,8 @@ def q_drift_gate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------------------------- transcripts
 
 
-TRANSCRIPTS_ORACLE_PATH = f"/tmp/acs_oracle_transcripts_{os.getpid()}"
-CONV_PROFILE_ORACLE_PATH = f"/tmp/acs_oracle_convprofile_{os.getpid()}"
+TRANSCRIPTS_ORACLE_PATH = _oracle_stage("transcripts")
+CONV_PROFILE_ORACLE_PATH = _oracle_stage("convprofile")
 
 
 def q_validate_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

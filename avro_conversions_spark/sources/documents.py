@@ -27,11 +27,13 @@ arrays (no nested arrays), nullable unions, no maps.
 from __future__ import annotations
 
 import re
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from avro_conversions_spark.constraints.core import DOC_VIOLATION, _violation_array
 from avro_conversions_spark.schema.model import (
     ArrayType,
     EnumType,
@@ -89,7 +91,45 @@ def _annotations(rt: ReadType) -> dict:
     return {}
 
 
-def _resolve(parsed_type: T.StructType, read: RecordType, binary_encoding: str):
+# PERMISSIVE mode puts the raw text of an unparseable document into the
+# corrupt-record column instead of failing the job (the reference throws
+# IOException "Invalid JSON" / SAXException per document — V9 says:
+# violation, not exception)
+_PERMISSIVE = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"}
+
+
+def _stage(
+    df: DataFrame,
+    src_col: str,
+    tok_fields: list[T.StructField],
+    keep_cols: list[str],
+    tokenize: Callable[..., Column],
+    options: dict[str, str] = _PERMISSIVE,
+) -> DataFrame:
+    """keep_cols + ``_raw`` (the document) + ``_doc`` (its tokenized
+    struct) + ``_corrupt`` (true when the document does not parse at all)."""
+    tok_with_corrupt = T.StructType(
+        tok_fields + [T.StructField("_corrupt_record", T.StringType(), True)]
+    )
+    staged = df.select(
+        *keep_cols,
+        F.col(src_col).alias("_raw"),
+        tokenize(F.col(src_col), tok_with_corrupt, options).alias("_doc"),
+    )
+    return staged.withColumn(
+        "_corrupt",
+        F.col("_raw").isNotNull()
+        & (F.col("_doc").isNull() | F.col("_doc._corrupt_record").isNotNull()),
+    )
+
+
+def _typed(
+    flat: DataFrame, read: RecordType, binary_encoding: str, keep_cols: list[str]
+) -> DataFrame:
+    """The tail every parser shares: resolve ``flat``'s string-typed read
+    fields against ``read`` into keep_cols + one typed column per read field
+    + ``_violations`` + ``_corrupt``. Violations ``flat`` already staged in
+    a ``_struct_viols`` column come first."""
     ann = _annotations(read)
 
     def override_encoding(d: dict) -> dict:
@@ -104,8 +144,47 @@ def _resolve(parsed_type: T.StructType, read: RecordType, binary_encoding: str):
 
     if binary_encoding != "base64":
         ann = override_encoding(ann)
-    wt = from_spark_schema(parsed_type, ann)
-    return SchemaResolver(strict_nullability=False, trust_reader=True).resolve_record(wt, read)
+    names = {f.name for f in read.fields}
+    wt = from_spark_schema(T.StructType([x for x in flat.schema.fields if x.name in names]), ann)
+    plans = SchemaResolver(strict_nullability=False, trust_reader=True).resolve_record(wt, read)
+    checks = []
+    for p in plans:
+        vp = p.violation_pred()
+        if vp is not None:
+            checks.append((vp, (p.name, p.converter.reason or "UNPARSEABLE")))
+    viol_arr = _violation_array(checks, DOC_VIOLATION)
+    if "_struct_viols" in flat.columns:
+        viol_arr = F.concat(F.col("_struct_viols"), viol_arr) if checks else F.col("_struct_viols")
+    return flat.select(
+        *keep_cols,
+        *[p.value() for p in plans],
+        viol_arr.alias("_violations"),
+        "_corrupt",
+    )
+
+
+def _parse_column(
+    df: DataFrame,
+    src_col: str,
+    read: RecordType,
+    binary_encoding: str,
+    keep_cols: list[str] | None,
+    tokenize: Callable[..., Column],
+) -> DataFrame:
+    keep = keep_cols or []
+    staged = _stage(df, src_col, list(_tokenizer_schema(read).fields), keep, tokenize)
+    flat = staged.select(
+        *keep,
+        "_raw",
+        "_corrupt",
+        # alias matching (doc/index.md:34-47): the tokenizer captured every
+        # alias as its own field; fold them into the primary name here
+        *[
+            F.coalesce(*[F.col("_doc").getField(n) for n in f.match_names()]).alias(f.name)
+            for f in read.fields
+        ],
+    )
+    return _typed(flat, read, binary_encoding, keep)
 
 
 def parse_json_column(
@@ -122,69 +201,7 @@ def parse_json_column(
     document is not valid JSON at all — reference behavior:
     IOException 'Invalid JSON', json/JsonAsAvroParserTest.java:90-95).
     """
-    tok_schema = _tokenizer_schema(read)
-    # PERMISSIVE mode puts the raw text of unparseable documents into the
-    # corrupt-record column instead of failing (the reference throws
-    # IOException "Invalid JSON" per document — V9 says: violation, not
-    # exception)
-    tok_with_corrupt = T.StructType(
-        list(tok_schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    parsed = F.from_json(
-        F.col(json_col),
-        tok_with_corrupt,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-    )
-    staged = df.select(
-        *(keep_cols or []),
-        F.col(json_col).alias("_raw"),
-        parsed.alias("_doc"),
-    )
-    staged = staged.withColumn(
-        "_corrupt",
-        F.col("_raw").isNotNull()
-        & (F.col("_doc").isNull() | F.col("_doc._corrupt_record").isNotNull()),
-    )
-    flat = staged.select(
-        *(keep_cols or []),
-        "_raw",
-        "_corrupt",
-        # alias matching (doc/index.md:34-47): the tokenizer captured every
-        # alias as its own field; fold them into the primary name here
-        *[
-            F.coalesce(*[F.col("_doc").getField(n) for n in f.match_names()]).alias(f.name)
-            for f in read.fields
-        ],
-    )
-    plans = _resolve(
-        T.StructType(
-            [x for x in flat.schema.fields if x.name in {f.name for f in read.fields}]
-        ),
-        read,
-        binary_encoding,
-    )
-    viols = []
-    for p in plans:
-        vp = p.violation_pred()
-        if vp is not None:
-            viols.append(
-                F.when(
-                    vp,
-                    F.struct(
-                        F.lit(p.name).alias("column"),
-                        F.lit(p.converter.reason or "UNPARSEABLE").alias("reason"),
-                    ),
-                )
-            )
-    viol_arr = (
-        F.filter(F.array(*viols), lambda x: x.isNotNull()) if viols else F.array()
-    )
-    return flat.select(
-        *(keep_cols or []),
-        *[p.value() for p in plans],
-        viol_arr.alias("_violations"),
-        "_corrupt",
-    )
+    return _parse_column(df, json_col, read, binary_encoding, keep_cols, F.from_json)
 
 
 def parse_xml_column(
@@ -196,68 +213,11 @@ def parse_xml_column(
 ) -> DataFrame:
     """XML variant (reference: XmlAsAvroParser). Spark 4 ships from_xml
     natively; repeated elements map to arrays in the tokenizer schema, the
-    cardinality rules (R36) are enforced by the resolver."""
-    tok_schema = _tokenizer_schema(read)
-    # PERMISSIVE + corrupt-record column: a document that is not XML at all
-    # must flag _corrupt (the reference raises SAXException per document,
-    # xml/XmlResolvingTest.java:163-212 — V9 turns that into a row flag);
-    # from_xml alone returns a null-filled struct, not null
-    tok_with_corrupt = T.StructType(
-        list(tok_schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    parsed = F.from_xml(
-        F.col(xml_col),
-        tok_with_corrupt,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-    )
-    staged = df.select(
-        *(keep_cols or []), F.col(xml_col).alias("_raw"), parsed.alias("_doc")
-    )
-    staged = staged.withColumn(
-        "_corrupt",
-        F.col("_raw").isNotNull()
-        & (F.col("_doc").isNull() | F.col("_doc._corrupt_record").isNotNull()),
-    )
-    flat = staged.select(
-        *(keep_cols or []),
-        "_raw",
-        "_corrupt",
-        # alias matching (doc/index.md:34-47): the tokenizer captured every
-        # alias as its own field; fold them into the primary name here
-        *[
-            F.coalesce(*[F.col("_doc").getField(n) for n in f.match_names()]).alias(f.name)
-            for f in read.fields
-        ],
-    )
-    plans = _resolve(
-        T.StructType(
-            [x for x in flat.schema.fields if x.name in {f.name for f in read.fields}]
-        ),
-        read,
-        binary_encoding,
-    )
-    viols = []
-    for p in plans:
-        vp = p.violation_pred()
-        if vp is not None:
-            viols.append(
-                F.when(
-                    vp,
-                    F.struct(
-                        F.lit(p.name).alias("column"),
-                        F.lit(p.converter.reason or "UNPARSEABLE").alias("reason"),
-                    ),
-                )
-            )
-    viol_arr = (
-        F.filter(F.array(*viols), lambda x: x.isNotNull()) if viols else F.array()
-    )
-    return flat.select(
-        *(keep_cols or []),
-        *[p.value() for p in plans],
-        viol_arr.alias("_violations"),
-        "_corrupt",
-    )
+    cardinality rules (R36) are enforced by the resolver. A document that
+    is not XML at all flags ``_corrupt`` (the reference raises SAXException
+    per document, xml/XmlResolvingTest.java:163-212); from_xml alone would
+    return a null-filled struct, not null."""
+    return _parse_column(df, xml_col, read, binary_encoding, keep_cols, F.from_xml)
 
 
 def read_json_documents(
@@ -268,7 +228,7 @@ def read_json_documents(
     in parallel; schema inference is skipped (we declare the tokenizer
     schema), which also avoids a full inference pre-pass."""
     raw = spark.read.text(path).withColumnRenamed("value", "_json")
-    return parse_json_column(raw, "_json", read)
+    return parse_json_column(raw, "_json", read, binary_encoding)
 
 
 def parse_xml_with_xsd(
@@ -341,29 +301,11 @@ def parse_xml_with_xsd(
             tok_fields.append(
                 T.StructField(n, inner if multiple else T.ArrayType(inner, True), True)
             )
-    tok_with_corrupt = T.StructType(
-        tok_fields + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    parsed = F.from_xml(
-        F.col(xml_col),
-        tok_with_corrupt,
-        {
-            "mode": "PERMISSIVE",
-            "columnNameOfCorruptRecord": "_corrupt_record",
-            # attributes and simpleContent text map onto the read schema's
-            # plain field names ('type', 'value'), not '_type' / '_VALUE'
-            "attributePrefix": "",
-            "valueTag": "value",
-        },
-    )
-    staged = df.select(
-        *(keep_cols or []), F.col(xml_col).alias("_raw"), parsed.alias("_doc")
-    )
-    staged = staged.withColumn(
-        "_corrupt",
-        F.col("_raw").isNotNull()
-        & (F.col("_doc").isNull() | F.col("_doc._corrupt_record").isNotNull()),
-    )
+    keep = keep_cols or []
+    # attributes and simpleContent text map onto the read schema's plain
+    # field names ('type', 'value'), not '_type' / '_VALUE'
+    options = {**_PERMISSIVE, "attributePrefix": "", "valueTag": "value"}
+    staged = _stage(df, xml_col, tok_fields, keep, F.from_xml, options)
 
     def _raw_subtree(tag: str) -> Column:
         """Re-assemble the raw inner content of <tag>...</tag> from the
@@ -378,7 +320,7 @@ def parse_xml_with_xsd(
         return F.when(inner != "", inner)
 
     # structural checks + scalarization of the occurrence arrays
-    value_cols, struct_viols = [], []
+    value_cols, struct_checks = [], []
     for f in read.fields:
         # getField, not a dotted path string — legal XML names may contain
         # '.', which F.col("_doc.a.b") would mis-parse as nesting
@@ -389,24 +331,10 @@ def parse_xml_with_xsd(
             continue
         n_occ = F.coalesce(F.array_size(merged), F.lit(0))
         if card == Card.REQUIRED:
-            struct_viols.append(
-                F.when(
-                    ~F.col("_corrupt") & (n_occ == 0),
-                    F.struct(
-                        F.lit(f.name).alias("column"),
-                        F.lit("MISSING_REQUIRED_ELEMENT").alias("reason"),
-                    ),
-                )
+            struct_checks.append(
+                (~F.col("_corrupt") & (n_occ == 0), (f.name, "MISSING_REQUIRED_ELEMENT"))
             )
-        struct_viols.append(
-            F.when(
-                ~F.col("_corrupt") & (n_occ > 1),
-                F.struct(
-                    F.lit(f.name).alias("column"),
-                    F.lit("TOO_MANY_ELEMENTS").alias("reason"),
-                ),
-            )
-        )
+        struct_checks.append((~F.col("_corrupt") & (n_occ > 1), (f.name, "TOO_MANY_ELEMENTS")))
         scalar = F.element_at(merged, 1)
         if f.name in unparsed_fields and isinstance(f.type, RecordType):
             # swap the tokenizer's character-data 'value' for the raw
@@ -422,49 +350,10 @@ def parse_xml_with_xsd(
 
     # structural violations reference `_doc` occurrence arrays, so they
     # must materialize in THIS projection — `flat` drops `_doc`
-    struct_viol_arr = (
-        F.filter(F.array(*struct_viols), lambda x: x.isNotNull())
-        if struct_viols
-        else None
+    struct_viols = (
+        [_violation_array(struct_checks, DOC_VIOLATION).alias("_struct_viols")]
+        if struct_checks
+        else []
     )
-    flat = staged.select(
-        *(keep_cols or []),
-        "_raw",
-        "_corrupt",
-        *( [struct_viol_arr.alias("_struct_viols")] if struct_viol_arr is not None else [] ),
-        *value_cols,
-    )
-    plans = _resolve(
-        T.StructType(
-            [x for x in flat.schema.fields if x.name in {f.name for f in read.fields}]
-        ),
-        read,
-        binary_encoding,
-    )
-    viols = []
-    for p in plans:
-        vp = p.violation_pred()
-        if vp is not None:
-            viols.append(
-                F.when(
-                    vp,
-                    F.struct(
-                        F.lit(p.name).alias("column"),
-                        F.lit(p.converter.reason or "UNPARSEABLE").alias("reason"),
-                    ),
-                )
-            )
-    if viols:
-        viol_arr = F.filter(F.array(*viols), lambda x: x.isNotNull())
-        if struct_viol_arr is not None:
-            viol_arr = F.concat(F.col("_struct_viols"), viol_arr)
-    elif struct_viol_arr is not None:
-        viol_arr = F.col("_struct_viols")
-    else:
-        viol_arr = F.array()
-    return flat.select(
-        *(keep_cols or []),
-        *[p.value() for p in plans],
-        viol_arr.alias("_violations"),
-        "_corrupt",
-    )
+    flat = staged.select(*keep, "_raw", "_corrupt", *struct_viols, *value_cols)
+    return _typed(flat, read, binary_encoding, keep)

@@ -1,4 +1,7 @@
-"""Dump .explain('formatted') for named queries to plans/<dir>/<name>_<tag>.txt."""
+"""Dump .explain('formatted') for named queries to <out_dir>/<name>_<tag>.txt.
+
+Usage: python tools/dump_plans.py <out_dir> <tag> <query>...  (data: $SPARK_GRAFT_SF_DIR)
+"""
 from __future__ import annotations
 
 import os
@@ -12,13 +15,11 @@ from avro_conversions_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, tag, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from avro_conversions_spark.operators.queries import QUERIES
 
     spark = get_spark(app_name="plans")
-    out_dir = os.path.join(REPO, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)
