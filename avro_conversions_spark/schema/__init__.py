@@ -1,5 +1,6 @@
 from avro_conversions_spark.schema.model import (  # noqa: F401
     ArrayType,
+    DecimalRange,
     DecimalType,
     EnumType,
     Field,
@@ -8,12 +9,12 @@ from avro_conversions_spark.schema.model import (  # noqa: F401
     PrimitiveType,
     ReadType,
     RecordType,
+    elect_number,
     from_avsc,
     to_spark_type,
 )
 from avro_conversions_spark.schema.json_schema import (  # noqa: F401
     AnalysisFailure,
-    NumberRange,
     SchemaProps,
     infer_read_schema,
     load_json_schema,

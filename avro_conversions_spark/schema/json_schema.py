@@ -8,9 +8,10 @@ Ports the reference's SchemaAnalyzer semantics (drivers-side, plan-time):
   (anyOf/oneOf/dependentSchemas/if-then-else, array item schemata) over
   types, required sets, properties, enum sets and number ranges
   (json/SchemaAnalyzer.java:405-470);
-- DecimalRange with open bounds (util/DecimalRange.java:20-209);
-- Avro-type election: bit-size -> int/long, precision -> float/double,
-  else decimal(p,s) (json/SchemaAnalyzer.java:80-220);
+- number ranges are ``model.DecimalRange`` (open bounds allowed) and the
+  number election is ``model.elect_number``: bit-size -> int/long,
+  precision -> float/double, else decimal(p,s)
+  (util/DecimalRange.java:20-209; json/SchemaAnalyzer.java:80-220);
 - title inference from $defs/definitions pointers
   (json/SchemaAnalyzer.java:51-55, 336-346).
 
@@ -30,19 +31,21 @@ from __future__ import annotations
 import json
 import re
 from dataclasses import dataclass, field
-from decimal import ROUND_DOWN, Decimal
+from decimal import Decimal
 
 from pyspark.sql import types as T
 
 from avro_conversions_spark.schema.model import (
     ArrayType,
-    DecimalType,
+    DecimalRange,
     EnumType,
     Field,
     LogicalType,
     PrimitiveType,
     ReadType,
     RecordType,
+    elect_number,
+    to_spark_type,
 )
 
 
@@ -78,96 +81,6 @@ _NAME_IN_REFERENCE = re.compile(
 _NAME_FROM_ANY_ID = re.compile(rf".*/({_IDENT})$")
 
 
-# --------------------------------------------------------------------- range
-
-
-@dataclass(frozen=True)
-class NumberRange:
-    """Decimal range with optional (open) bounds — util/DecimalRange.java."""
-
-    lo: Decimal | None = None
-    lo_incl: bool = False
-    hi: Decimal | None = None
-    hi_incl: bool = False
-
-    @staticmethod
-    def _cmp(a: Decimal | None, b: Decimal | None, null_low: bool) -> int:
-        if a is None and b is None:
-            return 0
-        if a is None:
-            return -1 if null_low else 1
-        if b is None:
-            return 1 if null_low else -1
-        return -1 if a < b else (0 if a == b else 1)
-
-    @staticmethod
-    def _scale(d: Decimal) -> int:
-        return -d.as_tuple().exponent
-
-    def _pick(self, a, a_incl, b, b_incl, want_min: bool, null_low: bool, incl_or: bool):
-        cmp = self._cmp(a, b, null_low)
-        if cmp == 0:
-            if a is None:
-                return None, False
-            chosen = a if self._scale(a) > self._scale(b) else b
-            return chosen, (a_incl or b_incl) if incl_or else (a_incl and b_incl)
-        take_a = (cmp < 0) == want_min
-        return (a, a_incl) if take_a else (b, b_incl)
-
-    def extend_with(self, other: "NumberRange") -> "NumberRange":
-        lo, loi = self._pick(self.lo, self.lo_incl, other.lo, other.lo_incl,
-                             want_min=True, null_low=True, incl_or=True)
-        hi, hii = self._pick(self.hi, self.hi_incl, other.hi, other.hi_incl,
-                             want_min=False, null_low=False, incl_or=True)
-        return NumberRange(lo, loi, hi, hii)
-
-    def restrict_to(self, other: "NumberRange") -> "NumberRange":
-        lo, loi = self._pick(self.lo, self.lo_incl, other.lo, other.lo_incl,
-                             want_min=False, null_low=True, incl_or=False)
-        hi, hii = self._pick(self.hi, self.hi_incl, other.hi, other.hi_incl,
-                             want_min=True, null_low=False, incl_or=False)
-        return NumberRange(lo, loi, hi, hii)
-
-    def is_integer_range(self, allow_zero_fraction: bool) -> bool:
-        for b in (self.lo, self.hi):
-            if b is None:
-                continue
-            if allow_zero_fraction:
-                if b != b.to_integral_value(rounding=ROUND_DOWN):
-                    return False
-            elif self._scale(b) > 0:
-                return False
-        return True
-
-    def integer_bit_size(self) -> int:
-        """Bits to represent the integer bounds, or 0 if unbounded
-        (DecimalRange.java:177-185: max bitLength + sign bit)."""
-        bits = -1
-        for b in (self.lo, self.hi):
-            if b is not None:
-                bits = max(bits, abs(int(b.to_integral_value(rounding=ROUND_DOWN))).bit_length())
-        return bits + 1
-
-    def required_scale(self) -> int:
-        return max((self._scale(b) for b in (self.lo, self.hi) if b is not None), default=0)
-
-    def required_precision(self) -> int:
-        s = self.required_scale()
-        prec = 0
-        for b in (self.lo, self.hi):
-            if b is not None:
-                q = b.quantize(Decimal(1).scaleb(-s))
-                prec = max(prec, len(q.as_tuple().digits))
-        return prec
-
-    def __str__(self) -> str:
-        return (
-            ("[" if self.lo_incl else "(") + ("-inf" if self.lo is None else str(self.lo))
-            + ", " + ("inf" if self.hi is None else str(self.hi))
-            + ("]" if self.hi_incl else ")")
-        )
-
-
 # --------------------------------------------------------------------- props
 
 
@@ -185,7 +98,7 @@ class SchemaProps:
     format: str | None = None
     content_encoding: str | None = None
     enum_values: list[str] | None = None  # insertion-ordered
-    number_range: NumberRange = field(default_factory=NumberRange)
+    number_range: DecimalRange = field(default_factory=DecimalRange)
     item_props: "SchemaProps | None" = None
     required: list[str] = field(default_factory=list)  # insertion-ordered
     properties: dict[str, "SchemaProps"] = field(default_factory=dict)
@@ -292,6 +205,10 @@ def _dec(v) -> Decimal | None:
     return None if v is None else Decimal(str(v))
 
 
+def _plain(b: Decimal | None) -> float | int | None:
+    return None if b is None else (float(b) if b % 1 else int(b))
+
+
 class _Analyzer:
     def __init__(self, root: dict, version: int):
         self.root = root
@@ -370,12 +287,12 @@ class _Analyzer:
         mn, mx = _dec(node.get("minimum")), _dec(node.get("maximum"))
         if self.version >= D6:
             emn, emx = _dec(node.get("exclusiveMinimum")), _dec(node.get("exclusiveMaximum"))
-            props.number_range = NumberRange(
+            props.number_range = DecimalRange(
                 mn if mn is not None else emn, mn is not None,
                 mx if mx is not None else emx, mx is not None,
             )
         else:
-            props.number_range = NumberRange(
+            props.number_range = DecimalRange(
                 mn, mn is not None and not node.get("exclusiveMinimum", False),
                 mx, mx is not None and not node.get("exclusiveMaximum", False),
             )
@@ -575,24 +492,8 @@ def _as_read_type(props: SchemaProps, seen: dict[int, ReadType]) -> tuple[ReadTy
         if props.content_encoding in ("base16", "base64"):
             return PrimitiveType("bytes"), nullable
         return PrimitiveType("string"), nullable
-    if t == "integer":
-        bits = props.number_range.integer_bit_size()
-        if bits == 0:
-            return PrimitiveType("long"), nullable
-        if bits <= 32:
-            return PrimitiveType("int"), nullable
-        if bits <= 64:
-            return PrimitiveType("long"), nullable
-        return DecimalType(props.number_range.required_precision(), 0), nullable
-    if t == "number":
-        p = props.number_range.required_precision()
-        if p == 0:
-            return PrimitiveType("double"), nullable
-        if p < 7:
-            return PrimitiveType("float"), nullable
-        if p < 16:
-            return PrimitiveType("double"), nullable
-        return DecimalType(p, props.number_range.required_scale()), nullable
+    if t in ("integer", "number"):
+        return elect_number(props.number_range, t == "integer"), nullable
     return PrimitiveType("boolean"), nullable
 
 
@@ -616,9 +517,6 @@ def to_write_type(source: str | dict | SchemaProps) -> "object":
         seen = {**seen, id(p): True}
         t = _elected(p)
         nullable = p.is_nullable()
-        rng = p.number_range
-        lo = None if rng.lo is None else (float(rng.lo) if rng.lo % 1 else int(rng.lo))
-        hi = None if rng.hi is None else (float(rng.hi) if rng.hi % 1 else int(rng.hi))
         if t == "object":
             return WriteType(
                 T.StructType(), nullable,
@@ -636,17 +534,11 @@ def to_write_type(source: str | dict | SchemaProps) -> "object":
                 content_encoding=p.content_encoding,
                 symbols=tuple(p.enum_values) if p.enum_values is not None else None,
             )
-        if t == "integer":
-            bits = rng.integer_bit_size()
-            dtype = T.IntegerType() if 0 < bits <= 32 else (
-                T.LongType() if bits <= 64 else T.DecimalType(rng.required_precision(), 0)
-            )
-            return WriteType(dtype, nullable, min_value=lo, max_value=hi)
-        if t == "number":
-            prec = rng.required_precision()
-            dtype = T.DoubleType() if prec == 0 or 7 <= prec < 16 else (
-                T.FloatType() if prec < 7 else T.DecimalType(prec, rng.required_scale())
-            )
+        if t in ("integer", "number"):
+            # integer bounds go out inclusive, so the resolver sizes them
+            rng = p.number_range
+            lo, hi = rng.integer_bounds() if t == "integer" else (_plain(rng.lo), _plain(rng.hi))
+            dtype = to_spark_type(elect_number(rng, t == "integer"))
             return WriteType(dtype, nullable, min_value=lo, max_value=hi)
         return WriteType(T.BooleanType(), nullable)
 

@@ -12,7 +12,11 @@ Semantics follow the reference's data model (SURVEY.md §1.1):
 - logical types: date, time-millis/micros, timestamp-millis/micros,
   local-timestamp-millis/micros (doc/index.md:66-91);
 - maps are rejected for the data path, as in the reference
-  (opwvhk/avro/io/AsAvroParserBase.java:311).
+  (opwvhk/avro/io/AsAvroParserBase.java:311);
+- ``DecimalRange`` is the one number range (lattice, bit size, precision)
+  that JSON Schema, XSD, observed data and the resolver share, and
+  ``elect_number`` the one range -> number type election
+  (util/DecimalRange.java:20-209; json/SchemaAnalyzer.java:177-207).
 
 The model is deliberately tiny and immutable: it exists to be *resolved*
 against an observed Spark schema on the driver, never shipped to executors.
@@ -21,7 +25,8 @@ against an observed Spark schema on the driver, never shipped to executors.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from decimal import ROUND_DOWN, Decimal
 from typing import Any
 
 from pyspark.sql import types as T
@@ -139,6 +144,131 @@ class RecordType(ReadType):
 
     def describe(self) -> str:
         return f"record({self.name})"
+
+
+# ---------------------------------------------------------------------------
+# Number ranges and the number-type election
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class DecimalRange:
+    """Decimal range with optional (open) bounds — util/DecimalRange.java.
+    ``None`` is an open bound; the flags say whether a bound is inclusive."""
+
+    lo: Decimal | None = None
+    lo_incl: bool = False
+    hi: Decimal | None = None
+    hi_incl: bool = False
+
+    @staticmethod
+    def _cmp(a: Decimal | None, b: Decimal | None, null_low: bool) -> int:
+        if a is None and b is None:
+            return 0
+        if a is None:
+            return -1 if null_low else 1
+        if b is None:
+            return 1 if null_low else -1
+        return -1 if a < b else (0 if a == b else 1)
+
+    @staticmethod
+    def _scale(d: Decimal) -> int:
+        return -d.as_tuple().exponent
+
+    def _pick(self, a, a_incl, b, b_incl, want_min: bool, null_low: bool, incl_or: bool):
+        cmp = self._cmp(a, b, null_low)
+        if cmp == 0:
+            if a is None:
+                return None, False
+            chosen = a if self._scale(a) > self._scale(b) else b
+            return chosen, (a_incl or b_incl) if incl_or else (a_incl and b_incl)
+        take_a = (cmp < 0) == want_min
+        return (a, a_incl) if take_a else (b, b_incl)
+
+    def extend_with(self, other: "DecimalRange") -> "DecimalRange":
+        lo, loi = self._pick(self.lo, self.lo_incl, other.lo, other.lo_incl,
+                             want_min=True, null_low=True, incl_or=True)
+        hi, hii = self._pick(self.hi, self.hi_incl, other.hi, other.hi_incl,
+                             want_min=False, null_low=False, incl_or=True)
+        return DecimalRange(lo, loi, hi, hii)
+
+    def restrict_to(self, other: "DecimalRange") -> "DecimalRange":
+        lo, loi = self._pick(self.lo, self.lo_incl, other.lo, other.lo_incl,
+                             want_min=False, null_low=True, incl_or=False)
+        hi, hii = self._pick(self.hi, self.hi_incl, other.hi, other.hi_incl,
+                             want_min=True, null_low=False, incl_or=False)
+        return DecimalRange(lo, loi, hi, hii)
+
+    def is_integer_range(self, allow_zero_fraction: bool) -> bool:
+        for b in (self.lo, self.hi):
+            if b is None:
+                continue
+            if allow_zero_fraction:
+                if b != b.to_integral_value(rounding=ROUND_DOWN):
+                    return False
+            elif self._scale(b) > 0:
+                return False
+        return True
+
+    def integer_bounds(self) -> tuple[int | None, int | None]:
+        """Inclusive integer bounds (None = open): an exclusive integral
+        bound moves one step inward, a fractional one truncates."""
+
+        def inward(b: Decimal | None, incl: bool, step: int) -> int | None:
+            if b is None:
+                return None
+            n = int(b.to_integral_value(rounding=ROUND_DOWN))
+            return n + step if not incl and n == b else n
+
+        return inward(self.lo, self.lo_incl, 1), inward(self.hi, self.hi_incl, -1)
+
+    def integer_bit_size(self) -> int:
+        """Bits to represent the integer bounds, or 0 if both are open
+        (DecimalRange.java:177-185: max Java bitLength + sign bit)."""
+        bounds = [b for b in self.integer_bounds() if b is not None]
+        if not bounds:
+            return 0
+        # Java BigInteger.bitLength excludes the sign: -2^31 needs 31 bits
+        return max((~b if b < 0 else b).bit_length() for b in bounds) + 1
+
+    def required_scale(self) -> int:
+        return max((self._scale(b) for b in (self.lo, self.hi) if b is not None), default=0)
+
+    def required_precision(self) -> int:
+        s = self.required_scale()
+        prec = 0
+        for b in (self.lo, self.hi):
+            if b is not None:
+                q = b.quantize(Decimal(1).scaleb(-s))
+                prec = max(prec, len(q.as_tuple().digits))
+        return prec
+
+    def __str__(self) -> str:
+        return (
+            ("[" if self.lo_incl else "(") + ("-inf" if self.lo is None else str(self.lo))
+            + ", " + ("inf" if self.hi is None else str(self.hi))
+            + ("]" if self.hi_incl else ")")
+        )
+
+
+def elect_number(rng: DecimalRange, integral: bool) -> ReadType:
+    """Range -> Avro number type (json/SchemaAnalyzer.java:177-207):
+    integers by bit size (int <= 32, long <= 64, else decimal(p,0)),
+    other numbers by precision (float < 7, double < 16, else decimal(p,s)).
+    An unbounded range elects long or double."""
+    if integral:
+        bits = rng.integer_bit_size()
+        if 0 < bits <= 32:
+            return PrimitiveType("int")
+        if bits <= 64:
+            return PrimitiveType("long")
+        return DecimalType(rng.required_precision(), 0)
+    p = rng.required_precision()
+    if 0 < p < 7:
+        return PrimitiveType("float")
+    if p < 16:
+        return PrimitiveType("double")
+    return DecimalType(p, rng.required_scale())
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,8 @@ Rule semantics ported (SURVEY.md §2.2 R1-R39):
 - widening int→long→float→double; lossy decimal→float/double and
   anything→string (doc/index.md:36-39); string rules ordered last
   (opwvhk/avro/json/JsonAsAvroParser.java:167);
-- integer bit-size election (util/DecimalRange.java:177-185);
+- integer bit-size election, asked of ``model.DecimalRange`` when the
+  writer declares both bounds (util/DecimalRange.java:177-185);
 - decimal precision/scale compatibility (json/JsonAsAvroParser.java:77-82)
   and *exact* scale semantics — RoundingMode.UNNECESSARY
   (io/AsAvroParserBase.java:457-462) becomes a regex scale/precision guard,
@@ -35,6 +36,7 @@ Rule semantics ported (SURVEY.md §2.2 R1-R39):
 from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
+from decimal import Decimal
 from typing import Any, Callable
 
 from pyspark.sql import Column
@@ -43,6 +45,7 @@ from pyspark.sql import types as T
 
 from avro_conversions_spark.schema.model import (
     ArrayType,
+    DecimalRange,
     DecimalType,
     EnumType,
     Field,
@@ -181,16 +184,13 @@ def _is_integral(dt: T.DataType) -> bool:
 
 
 def _int_bits(wt: WriteType) -> int:
-    """Bit size needed by the writer's integer range
+    """Bit size needed by the writer's integer range, inclusive bounds
     (reference: util/DecimalRange.java:177-185). Unknown range → width of
     the physical type."""
     if wt.min_value is not None and wt.max_value is not None:
-        lo, hi = int(wt.min_value), int(wt.max_value)
-        if INT32_MIN <= lo and hi <= INT32_MAX:
-            return 32
-        if INT64_MIN <= lo and hi <= INT64_MAX:
-            return 64
-        return 128
+        return DecimalRange(
+            Decimal(wt.min_value), True, Decimal(wt.max_value), True
+        ).integer_bit_size()
     return {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}.get(
         type(wt.dtype), 128
     )

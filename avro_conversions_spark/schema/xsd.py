@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from avro_conversions_spark.schema.model import (
     ArrayType,
+    DecimalRange,
     DecimalType,
     EnumType,
     Field,
@@ -198,8 +199,8 @@ def _doc(el: ET.Element | None) -> str | None:
 def _elect_decimal(facets: dict) -> object:
     """The reference's decimal facet math (TypeBuildingVisitor.java:198-240):
     rounds bounds to the scale (HALF_UP), nudges exclusive bounds one ULP
-    inward, sizes integers by bit length, falls back to double when the
-    precision is unconstrained."""
+    inward, sizes integers by ``DecimalRange.integer_bit_size``, falls back
+    to double when the precision is unconstrained."""
     frac = facets.get("fractionDigits")
     if frac is None:
         return XScalar("double")
@@ -231,10 +232,8 @@ def _elect_decimal(facets: dict) -> object:
             return XScalar("double")  # scale without precision -> double
         return XDecimal(2**31 - 1, digits, frac)
     sized = bounds + ([max_digits, -max_digits] if max_digits is not None else [])
-    bits = max(
-        (int(abs(b).to_integral_value(rounding="ROUND_DOWN")).bit_length() + 1 for b in sized),
-        default=64,
-    )
+    # the widest value sits at an end of the span, so its bit size is the max
+    bits = DecimalRange(min(sized), True, max(sized), True).integer_bit_size() if sized else 64
     if bits <= 32:
         return INT_TYPE
     if bits <= 64:

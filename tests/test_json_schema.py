@@ -1,10 +1,12 @@
 """Port of the reference's SchemaAnalyzerTest (json/SchemaAnalyzerTest.java:
 21-150) — JSON-Schema walk, draft-version keyword gating, the
 INTERSECT/UNION lattice, and the Avro-type election, asserted structurally
-against the reference's own fixture files."""
+against fixture files in tests/fixtures/json that reproduce the reference's
+cases."""
 
 from __future__ import annotations
 
+import os
 from decimal import Decimal
 
 import pytest
@@ -12,10 +14,10 @@ import pytest
 from avro_conversions_spark.schema import (
     AnalysisFailure,
     ArrayType,
+    DecimalRange,
     DecimalType,
     EnumType,
     LogicalType,
-    NumberRange,
     PrimitiveType,
     RecordType,
     from_avsc,
@@ -24,7 +26,7 @@ from avro_conversions_spark.schema import (
     to_write_type,
 )
 
-FIXTURES = "/root/reference/src/test/resources/opwvhk/avro/json"
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "json")
 
 
 def load(name: str):
@@ -46,7 +48,7 @@ def test_draft4_semantics():
     num = p.properties["number"]
     # fraction in the bound -> NOT an integer range in draft 4
     assert "integer" not in num.types and "number" in num.types
-    assert num.number_range == NumberRange(Decimal(0), True, Decimal("123.0"), False)
+    assert num.number_range == DecimalRange(Decimal(0), True, Decimal("123.0"), False)
     choice = p.properties["choice"]
     assert choice.enum_values == ["no", "maybe"]  # const ignored in draft 4
     text = p.properties["text"]
@@ -65,7 +67,7 @@ def test_draft6_semantics():
     p = load("draft6-schema.json")
     num = p.properties["number"]
     assert {"integer", "number"} <= num.types  # 123.0 is integral now
-    assert num.number_range == NumberRange(Decimal(0), True, Decimal("123.0"), False)
+    assert num.number_range == DecimalRange(Decimal(0), True, Decimal("123.0"), False)
     # const 'yes' INTERSECT enum [yes, no] -> [yes]
     assert p.properties["choice"].enum_values == ["yes"]
     items = p.properties["names"].item_props
@@ -97,7 +99,7 @@ def test_draft2020_semantics():
     small = p.properties["smallNumber"]
     assert small.effective_title() == "int"
     assert {"integer", "number"} <= small.types
-    assert small.number_range == NumberRange(Decimal(0), False, Decimal(2147483648), False)
+    assert small.number_range == DecimalRange(Decimal(0), False, Decimal(2147483648), False)
     assert p.properties["multipleChoice"].enum_values[:2] == ["x", "y"]
     assert len(p.properties["multipleChoice"].enum_values) == 3
     assert p.properties["stillAnEnum"].enum_values == ["x", "y"]
@@ -172,13 +174,29 @@ def test_named_type_reference_in_avsc():
 
 def test_number_range_lattice_open_bounds():
     """util/DecimalRange.java:60-150 with null bounds."""
-    a = NumberRange(Decimal(0), True, None, False)         # [0, inf)
-    b = NumberRange(None, False, Decimal("10.5"), True)    # (-inf, 10.5]
-    assert a.restrict_to(b) == NumberRange(Decimal(0), True, Decimal("10.5"), True)
-    assert a.extend_with(b) == NumberRange(None, False, None, False)
+    a = DecimalRange(Decimal(0), True, None, False)         # [0, inf)
+    b = DecimalRange(None, False, Decimal("10.5"), True)    # (-inf, 10.5]
+    assert a.restrict_to(b) == DecimalRange(Decimal(0), True, Decimal("10.5"), True)
+    assert a.extend_with(b) == DecimalRange(None, False, None, False)
     assert a.restrict_to(b).required_precision() == 3
     assert a.restrict_to(b).required_scale() == 1
-    assert NumberRange().integer_bit_size() == 0
+    assert DecimalRange().integer_bit_size() == 0
+
+
+def test_disjoint_allof_bounds_still_load():
+    """The lattice never rejects an empty intersection: disjoint allOf
+    bounds on an [integer, string] property load as an empty range, and
+    the property still elects its string type."""
+    both = ["integer", "string"]
+    p = load_json_schema(
+        {"title": "R", "type": "object", "properties": {"v": {"type": both, "allOf": [
+            {"type": both, "minimum": 0, "maximum": 1},
+            {"type": both, "minimum": 5, "maximum": 9},
+        ]}}}
+    )
+    v = p.properties["v"]
+    assert v.number_range == DecimalRange(Decimal(5), True, Decimal(1), True)
+    assert infer_read_schema(p)[0].fields[0].type == PrimitiveType("string")
 
 
 def test_write_type_from_json_schema():

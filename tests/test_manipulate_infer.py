@@ -8,18 +8,20 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from avro_conversions_spark.infer import (
-    DecimalRange,
-    elect_numeric_type,
-    suggest_read_type,
-)
+from avro_conversions_spark.infer import suggest_read_type
 from avro_conversions_spark.manipulate import (
     SchemaManipulator,
     convert_name,
     document_schema_markdown,
     validate_unique_names,
 )
-from avro_conversions_spark.schema.model import DecimalType, EnumType, PrimitiveType
+from avro_conversions_spark.schema.model import (
+    DecimalRange,
+    DecimalType,
+    EnumType,
+    PrimitiveType,
+    elect_number,
+)
 
 
 def test_naming_conventions():
@@ -109,31 +111,25 @@ def test_unique_name_validation():
 # --- inference -------------------------------------------------------------
 
 
+def _closed(lo, hi) -> DecimalRange:
+    return DecimalRange(Decimal(lo), True, Decimal(hi), True)
+
+
 def test_decimal_range_algebra():
     """util/DecimalRange.java:60-150 extend/restrict."""
-    a = DecimalRange(Decimal(0), Decimal(100))
-    b = DecimalRange(Decimal(-50), Decimal(50))
-    assert a.extend_with(b) == DecimalRange(Decimal(-50), Decimal(100))
-    assert a.restrict_to(b) == DecimalRange(Decimal(0), Decimal(50))
-    with pytest.raises(ValueError):
-        DecimalRange(Decimal(0), Decimal(1)).restrict_to(DecimalRange(Decimal(5), Decimal(9)))
+    a = _closed(0, 100)
+    b = _closed(-50, 50)
+    assert a.extend_with(b) == _closed(-50, 100)
+    assert a.restrict_to(b) == _closed(0, 50)
 
 
 def test_bit_size_and_type_election():
     """SchemaAnalyzer.java:177-207 + DecimalRange.java:177-209."""
-    assert elect_numeric_type(DecimalRange(Decimal(0), Decimal(1000)), True) == PrimitiveType("int")
-    assert elect_numeric_type(
-        DecimalRange(Decimal(0), Decimal(9_000_000_000)), True
-    ) == PrimitiveType("long")
-    assert isinstance(
-        elect_numeric_type(DecimalRange(Decimal(0), Decimal(10**21)), True), DecimalType
-    )
-    assert elect_numeric_type(
-        DecimalRange(Decimal("0.5"), Decimal("999.5")), False
-    ) == PrimitiveType("float")
-    assert elect_numeric_type(
-        DecimalRange(Decimal("0.123456789"), Decimal("1.0")), False
-    ) == PrimitiveType("double")
+    assert elect_number(_closed(0, 1000), True) == PrimitiveType("int")
+    assert elect_number(_closed(0, 9_000_000_000), True) == PrimitiveType("long")
+    assert isinstance(elect_number(_closed(0, 10**21), True), DecimalType)
+    assert elect_number(_closed("0.5", "999.5"), False) == PrimitiveType("float")
+    assert elect_number(_closed("0.123456789", "1.0"), False) == PrimitiveType("double")
 
 
 def test_suggest_read_type(spark):

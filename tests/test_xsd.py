@@ -1,9 +1,12 @@
 """Port of the reference's XsdAnalyzerTest (xml/XsdAnalyzerTest.java:76-300)
 against its own fixture XSDs — groups/cardinality, attributes, simple and
 complex content, mixed/any coercion, decimal facet elections, defaults,
-recursion. Closes SURVEY I5-I8 (previously n/a)."""
+recursion. Closes SURVEY I5-I8 (previously n/a). The fixtures in
+tests/fixtures/xml reproduce the reference's cases."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -19,7 +22,7 @@ from avro_conversions_spark.schema.xsd import (
     xsd_to_write_type,
 )
 
-FIXTURES = "/root/reference/src/test/resources/opwvhk/avro/xml"
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "xml")
 
 
 @pytest.fixture(scope="module")
